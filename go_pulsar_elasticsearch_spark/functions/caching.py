@@ -62,7 +62,8 @@ _durable_tmp: str | None = None
 
 
 def _durable_requested(df: DataFrame) -> bool:
-    if os.environ.get("GPE_DURABLE_CHECKPOINT", "") not in ("", "0"):
+    env = os.environ.get("GPE_DURABLE_CHECKPOINT", "").strip().lower()
+    if env in ("1", "true", "yes"):
         return True
     try:
         return (

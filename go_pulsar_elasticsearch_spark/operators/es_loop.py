@@ -71,7 +71,6 @@ def _seed(spark: SparkSession, sf_dir: str) -> str:
         .write.format("es_bulk_sim")
         .option("endpoint", url)
         .option("index", "documents_idx")
-        .option("id_field", "uuid")
         .option("state_dir", scratch + "/state")
         .option("dlq_dir", scratch + "/dlq")
         .mode("append")

@@ -20,14 +20,18 @@ The heart of the reference is the bulk-index + per-item ack/nack/DLQ loop:
   mapping template (tolerating resource_already_exists_exception), then
   the alias flip.
 
-Spark shape: the bulk write is a *transformation* (`bulk_index_rows`
-under mapInPandas), emitting one (uuid, status, error, doc) row per
-document — so ack/nack reconciliation is a DataFrame filter, DLQ routing
-is a write of the failed slice, and everything distributes: each input
-partition posts its own bulk requests from its executor, which is the
-reference's N bulk workers (`es.go:164`, NUMBER_* in .env:3-5).  Strict
-mapping enforcement (sources/es_sink.py) runs BEFORE any bytes reach the
-wire, reproducing `dynamic: "strict"` (mapping.json:11) batch-wide.
+One write path: every `_bulk` request the package sends goes through
+`bulk_index` — a generator over (index, doc, tag) items that serializes
+each doc once, chunks by count and bytes, and yields every item paired
+with its per-item result in input order.  Its callers are the
+`es_bulk_sim` DataSource writer (sources/es_writer_sim.py: batch and
+streaming writes, broker ack/nack, DLQ spool and `replay_dlq`) and
+`bulk_index_rows`, the mapInPandas transformation behind the
+foreachBatch body `write_batch_via_bulk`.  Each runs per partition on
+the executor — the reference's N bulk workers (`es.go:164`, NUMBER_* in
+.env:3-5).  In the foreachBatch body, strict mapping enforcement
+(sources/es_sink.py) runs BEFORE any bytes reach the wire, reproducing
+`dynamic: "strict"` (mapping.json:11) batch-wide.
 
 Everything speaks plain HTTP via urllib (stdlib) — certified in pytest
 against an in-process mock `_bulk` endpoint (tests/test_es_bulk.py);
@@ -38,7 +42,6 @@ from __future__ import annotations
 
 import json
 import math
-import threading
 import time
 import urllib.error
 import urllib.request
@@ -49,6 +52,10 @@ from pyspark.sql import DataFrame
 
 # es.go:139 — elasticsearch.Config{RetryOnStatus: [502, 503, 504, 429]}
 RETRY_STATUSES = frozenset({429, 502, 503, 504})
+
+# es.go:186 — every write is keyed DocumentID=uuid, which is what makes
+# redelivery and replay last-write-wins idempotent
+ID_FIELD = "uuid"
 
 
 class BulkTransportError(RuntimeError):
@@ -65,7 +72,6 @@ class BulkClientOptions:
     """Wire-level knobs, pinned to the reference's config."""
 
     index: str = "index_data"
-    id_field: str = "uuid"              # es.go:186
     batch_entries: int = 1000           # MAX_BATCH_SIZE .env:16
     batch_bytes: int = 5 * 1024 * 1024  # es.go:166 FlushBytes
     retries: int = 10                   # RETRIES .env:11
@@ -97,13 +103,13 @@ def _to_jsonable(v):
     return v
 
 
-def docs_to_ndjson(docs: Iterable[dict], index: str, id_field: str) -> bytes:
+def docs_to_ndjson(docs: Iterable[dict], index: str) -> bytes:
     """The `_bulk` body: one `index` action line (op type `index` =
     last-write-wins upsert, es.go:186) + one source line per document."""
     lines = []
     for doc in docs:
         lines.append(json.dumps(
-            {"index": {"_index": index, "_id": doc[id_field]}},
+            {"index": {"_index": index, "_id": doc[ID_FIELD]}},
             separators=(",", ":")))
         lines.append(json.dumps(doc, separators=(",", ":")))
     return ("\n".join(lines) + "\n").encode("utf-8")
@@ -161,56 +167,65 @@ def parse_bulk_items(resp: dict) -> Iterator[tuple[str, int, str | None]]:
         yield action.get("_id", ""), status, reason
 
 
-def bulk_index_docs(docs: list[dict], endpoint: str, opts: BulkClientOptions,
-                    sleep=time.sleep) -> list[tuple[str, int, str | None]]:
-    """Index a list of JSON docs, chunked by count AND bytes (es.go:
-    161-168 FlushInterval analog is the micro-batch trigger; Flush
-    thresholds are per-request here).  Returns per-item results in
-    STRICT INPUT ORDER — results[i] pairs with docs[i].  ES bulk
-    preserves action order within a request, and chunks are posted and
-    extended sequentially; the passthrough reconciliation in
-    bulk_index_rows and replay_dlq load-bearingly depends on this
-    positional pairing for msg_id-keyed ack/nack.  A response carrying
-    the WRONG item count raises BulkTransportError here — the contract
-    owner enforces it once, so no caller can silently mis-pair (an
-    unpaired tail would under-count or strand messages in flight)."""
-    out: list[tuple[str, int, str | None]] = []
-    chunk: list[dict] = []
-    chunk_bytes = 0
+def bulk_index(items: Iterable[tuple], endpoint: str,
+               opts: BulkClientOptions, sleep=time.sleep,
+               ) -> Iterator[tuple[tuple, int, str | None]]:
+    """Index ``(index, doc, tag)`` items; ``tag`` is caller context (a
+    broker message id, a DLQ entry) handed back untouched.  Each doc is
+    serialized once; requests are cut by count AND bytes (es.go:161-168
+    flush thresholds — the FlushInterval analog is the micro-batch
+    trigger).  Yields ``(item, status, error)`` for EVERY input item in
+    INPUT ORDER and holds at most one request in memory.  ES answers a
+    request's actions in order, so results pair positionally and stay
+    exact even when two items share a doc id; a response with the wrong
+    item count raises BulkTransportError, because an unpaired tail
+    would under-count or strand messages in flight.
 
-    def post(batch: list[dict]) -> None:
-        resp = bulk_post(
-            endpoint, docs_to_ndjson(batch, opts.index, opts.id_field),
-            opts, sleep,
-        )
-        items = list(parse_bulk_items(resp))
-        if len(items) != len(batch):
-            raise BulkTransportError(
-                502,
-                f"bulk returned {len(items)} items for "
-                f"{len(batch)} actions",
-            )
-        out.extend(items)
+    A doc whose ``uuid`` is NULL is never posted: it yields status 0, a
+    failed item.  Real ES would reject it or mint an auto id, and either
+    breaks the id-keyed overwrite that replay relies on (es.go:186)."""
+    chunk: list[tuple[tuple, bytes | None]] = []
+    size = 0
 
-    for doc in docs:
-        size = len(json.dumps(doc, separators=(",", ":"))) + 64
+    def flush() -> Iterator[tuple[tuple, int, str | None]]:
+        body = [line for _item, line in chunk if line is not None]
+        results = iter(())
+        if body:
+            got = list(parse_bulk_items(
+                bulk_post(endpoint, b"".join(body), opts, sleep)))
+            if len(got) != len(body):
+                raise BulkTransportError(
+                    502,
+                    f"bulk returned {len(got)} items for {len(body)} actions",
+                )
+            results = iter(got)
+        for item, line in chunk:
+            if line is None:
+                yield item, 0, f"{ID_FIELD} is null"
+            else:
+                _id, status, err = next(results)
+                yield item, status, err
+
+    for item in items:
+        index, doc, _tag = item
+        line = (None if doc.get(ID_FIELD) is None
+                else docs_to_ndjson((doc,), index))
+        n = 0 if line is None else len(line)
         if chunk and (len(chunk) >= opts.batch_entries
-                      or chunk_bytes + size > opts.batch_bytes):
-            post(chunk)
-            chunk, chunk_bytes = [], 0
-        chunk.append(doc)
-        chunk_bytes += size
+                      or size + n > opts.batch_bytes):
+            yield from flush()
+            chunk, size = [], 0
+        chunk.append((item, line))
+        size += n
     if chunk:
-        post(chunk)
-    return out
+        yield from flush()
 
 
 _RESULT_SCHEMA = "uuid string, status int, error string, doc string"
 
 
 def bulk_index_rows(df: DataFrame, endpoint: str,
-                    opts: BulkClientOptions | None = None,
-                    passthrough: tuple[str, ...] = ()) -> DataFrame:
+                    opts: BulkClientOptions | None = None) -> DataFrame:
     """Distributed bulk indexing as a transformation.
 
     Each input partition serializes its rows to JSON docs and posts bulk
@@ -221,13 +236,6 @@ def bulk_index_rows(df: DataFrame, endpoint: str,
     join back (the reference nacks the original message for the same
     reason, main.go:194-197).
 
-    `passthrough` names input columns carried to the result row WITHOUT
-    being indexed (e.g. a broker message id): because an ES bulk response
-    returns exactly one item per action IN ORDER, results pair with input
-    rows positionally, so the pairing stays exact even when two rows share
-    a doc id — keying reconciliation on a passthrough message id instead
-    of the (possibly duplicated) uuid (round-5 ADVICE).
-
     At 100 TB this is the right shape: no collect, no driver fan-in; the
     result frame is tiny per partition (ids + statuses) unless failures
     are pervasive, and failure payloads are exactly what must be
@@ -235,47 +243,28 @@ def bulk_index_rows(df: DataFrame, endpoint: str,
     """
     opts = opts or BulkClientOptions()
     endpoint_v, opts_v = endpoint, opts  # close over plain values only
-    pt_cols = tuple(passthrough)
 
     def run(batches):
         import pandas as pd
 
         for pdf in batches:
-            if pdf.empty:
-                continue
-            pt = pdf[list(pt_cols)] if pt_cols else None
-            doc_pdf = pdf.drop(columns=list(pt_cols)) if pt_cols else pdf
-            docs = []
-            for rec in doc_pdf.to_dict("records"):
-                docs.append({k: _to_jsonable(v) for k, v in rec.items()})
-            results = bulk_index_docs(docs, endpoint_v, opts_v)
-            if len(results) != len(docs):
-                raise BulkTransportError(
-                    0, f"bulk item count {len(results)} != posted {len(docs)}"
-                )
-            out = pd.DataFrame(
-                {
-                    "uuid": [r[0] for r in results],
-                    "status": [r[1] for r in results],
-                    "error": [r[2] for r in results],
-                    # positional: the i-th result IS the i-th posted doc
-                    "doc": [
-                        None if 200 <= r[1] < 300
-                        else json.dumps(docs[i], separators=(",", ":"))
-                        for i, r in enumerate(results)
-                    ],
-                }
+            items = (
+                (opts_v.index,
+                 {k: _to_jsonable(v) for k, v in rec.items()}, None)
+                for rec in pdf.to_dict("records")
             )
-            for c in pt_cols:
-                out[c] = pt[c].values
-            yield out
+            out = [
+                (doc.get(ID_FIELD), status, err,
+                 None if 200 <= status < 300
+                 else json.dumps(doc, separators=(",", ":")))
+                for (_index, doc, _tag), status, err
+                in bulk_index(items, endpoint_v, opts_v)
+            ]
+            if out:
+                yield pd.DataFrame(
+                    out, columns=["uuid", "status", "error", "doc"])
 
-    schema = _RESULT_SCHEMA
-    if pt_cols:
-        schema += ", " + ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in pt_cols
-        )
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=_RESULT_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -332,30 +321,33 @@ def _http(endpoint: str, path: str, method: str, payload: dict | None,
         return exc.code, json.loads(exc.read().decode("utf-8", "replace") or "{}")
 
 
-def ensure_dated_index(endpoint: str, alias: str, date_str: str,
-                       mapping: dict, shards: int = 4, replicas: int = 0,
-                       refresh_interval: str = "10s") -> str:
-    """Create `<alias>_<date>` from the mapping template with interpolated
-    shards/replicas/refresh (es.go:79-83, mapping.json:3-5), tolerate
-    resource_already_exists_exception (es.go:92-99), and point the alias
-    at the new index (es.go:102-116).  Returns the dated index name."""
-    index = f"{alias}_{date_str}"
-    body = {
-        "settings": {
-            "number_of_shards": shards,
-            "number_of_replicas": replicas,
-            "refresh_interval": refresh_interval,
-        },
-        "mappings": mapping,
-    }
-    status, resp = _http(endpoint, f"/{index}", "PUT", body)
+# mapping.json:3-5 settings, interpolated from .env:18-21 (es.go:79-83)
+_INDEX_SETTINGS = {
+    "number_of_shards": 4,
+    "number_of_replicas": 0,
+    "refresh_interval": "10s",
+}
+
+
+def _create_index(endpoint: str, index: str, mapping: dict) -> None:
+    """PUT the index from the mapping template, tolerating
+    resource_already_exists_exception (es.go:92-99)."""
+    status, resp = _http(
+        endpoint, f"/{index}", "PUT",
+        {"settings": dict(_INDEX_SETTINGS), "mappings": mapping},
+    )
     if status >= 300:
         err_type = (resp.get("error") or {}).get("type", "")
         if err_type != "resource_already_exists_exception":
             raise BulkTransportError(status, json.dumps(resp))
-    # REPOINT, not accumulate: the reference moves the alias to the new
-    # dated index (es.go:102-116); on real ES an add-only action leaves
-    # the alias on every previous day too, so swap atomically
+
+
+def _point_alias(endpoint: str, alias: str, index: str) -> None:
+    """REPOINT, not accumulate: the reference moves the alias to the new
+    dated index (es.go:102-116); on real ES an add-only action leaves
+    the alias on every previous day too, so swap with one remove+add
+    actions array (applied atomically; must_exist=false tolerates the
+    first-ever flip)."""
     status, resp = _http(
         endpoint, "/_aliases", "POST",
         {
@@ -373,20 +365,20 @@ def ensure_dated_index(endpoint: str, alias: str, date_str: str,
     )
     if status >= 300:
         raise BulkTransportError(status, json.dumps(resp))
+
+
+def ensure_dated_index(endpoint: str, alias: str, date_str: str,
+                       mapping: dict) -> str:
+    """Startup DDL (es.go:78-116): create `<alias>_<date>` from the
+    mapping template and point the alias at it.  Returns the dated index
+    name."""
+    index = f"{alias}_{date_str}"
+    _create_index(endpoint, index, mapping)
+    _point_alias(endpoint, alias, index)
     return index
 
 
-# Per-process memo of indices already ensured — saves one idempotent
-# PUT per (worker, day), nothing more; correctness never depends on it
-# (bulk writers run in separate Python worker processes, so any
-# process-local view of the ALIAS would go stale — the flip decision
-# below reads the cluster instead).
-_ROLLOVER_LOCK = threading.Lock()
-_ENSURED_INDICES: set[tuple[str, str]] = set()
-
-
-def rollover_dated_index(endpoint: str, alias: str, date_str: str,
-                         mapping: dict | None = None) -> str:
+def rollover_dated_index(endpoint: str, alias: str, date_str: str) -> str:
     """es.go:78-116 as CONTINUOUS behavior (round-6 VERDICT #5): the
     reference computes the dated index once at startup, so a connector
     crossing midnight keeps writing to yesterday's index; here every
@@ -403,52 +395,17 @@ def rollover_dated_index(endpoint: str, alias: str, date_str: str,
     action itself is idempotent.  Returns the dated index name to bulk
     into."""
     index = f"{alias}_{date_str}"
-    with _ROLLOVER_LOCK:
-        need_create = (endpoint, index) not in _ENSURED_INDICES
-        if need_create:
-            _ENSURED_INDICES.add((endpoint, index))
-    if need_create:
-        body = {
-            "settings": {"number_of_shards": 4, "number_of_replicas": 0,
-                         "refresh_interval": "10s"},
-            "mappings": mapping or INDEX_MAPPING_ES,
-        }
-        status, resp = _http(endpoint, f"/{index}", "PUT", body)
-        if status >= 300:
-            err_type = (resp.get("error") or {}).get("type", "")
-            if err_type != "resource_already_exists_exception":
-                raise BulkTransportError(status, json.dumps(resp))
+    _create_index(endpoint, index, INDEX_MAPPING_ES)
     status, resp = _http(endpoint, f"/_alias/{alias}", "GET", None)
-    # GET /_alias/<name> maps every index carrying the alias; an
-    # add-only flip on real ES would ACCUMULATE indices under the
-    # alias, so compare against the NEWEST current member and swap
-    # with one atomic remove+add actions array (ES applies the array
-    # atomically; must_exist=false tolerates the first-ever flip).
-    # ONLY a 404 means "alias doesn't exist yet" — any other failure
-    # must raise: treating a transient 5xx as no-alias would let a
-    # late-data flush REMOVE the alias from the newest index and swap
-    # it backward, the exact breakage the monotonic check prevents.
+    # GET /_alias/<name> maps every index carrying the alias, so compare
+    # against the NEWEST member.  ONLY a 404 means "alias doesn't exist
+    # yet" — treating a transient 5xx as no-alias would let a late-data
+    # flush swap the alias backward, the breakage this check prevents.
     if status >= 300 and status != 404:
         raise BulkTransportError(status, json.dumps(resp))
     current = max(resp, default="") if status < 300 else ""
-    if current == "" or current < index:  # YYYY-MM-DD suffixes sort
-        status, resp = _http(
-            endpoint, "/_aliases", "POST",
-            {
-                "actions": [
-                    {
-                        "remove": {
-                            "index": f"{alias}_*",
-                            "alias": alias,
-                            "must_exist": False,
-                        }
-                    },
-                    {"add": {"index": index, "alias": alias}},
-                ]
-            },
-        )
-        if status >= 300:
-            raise BulkTransportError(status, json.dumps(resp))
+    if current < index:  # YYYY-MM-DD suffixes sort
+        _point_alias(endpoint, alias, index)
     return index
 
 

@@ -2,11 +2,12 @@
 (round-5 VERDICT #1): the reference's channel wiring between consumer
 and bulk processor (main.go:250-282) IS the streaming engine's job, so
 this module runs it under the engine's own trigger/offset machinery —
-``readStream.format("pulsar_broker_sim")`` feeding
-``foreachBatch(decode -> _bulk -> ack/nack)`` with a checkpoint —
-instead of the hand-rolled driver while-loop (operators/pulsar_loop.py,
-kept as the certified reference implementation; both share
-index_and_reconcile, so there is exactly one reconciliation path).
+``readStream.format("pulsar_broker_sim")`` -> Avro decode ->
+``writeStream.format("es_bulk_sim")`` with a checkpoint, the sink acking
+and nacking at each epoch commit.  The hand-rolled while-loop
+(operators/pulsar_loop.run_delivery_loop) writes each round through the
+same sink (``pulsar_loop.sink_writer``), so both drivers share one
+`_bulk` + reconciliation path.
 
 Process topology (discovered the hard way): Spark runs a Python
 streaming source's ``read()`` in a SEPARATE worker process
@@ -14,10 +15,9 @@ streaming source's ``read()`` in a SEPARATE worker process
 cannot share memory with a test-local broker object.  The consume
 channel therefore crosses a real process boundary over HTTP
 (pulsar_mock_broker.make_broker_server), exactly like a production
-consumer talking to a broker service.  foreachBatch DOES run in the
-driver process, so ack/nack reconciliation uses the broker handle
-directly — the same split as the reference (consumer channel in, acks
-out, main.go:250-282).
+consumer talking to a broker service, and the sink acks/nacks over the
+same wire — the reference's two channels (consumer in, acks out,
+main.go:250-282).
 
 Replay discipline (what makes a mid-drain kill/restart safe):
 
@@ -46,7 +46,6 @@ import json
 import os
 import tempfile
 import time as _time
-import urllib.request
 from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
@@ -58,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from go_pulsar_elasticsearch_spark.sources.es_bulk import _http
+
 _SCHEMA = StructType(
     [
         StructField("msg_id", LongType()),
@@ -68,15 +69,17 @@ _SCHEMA = StructType(
 _MAX_IDLE_ADVANCES = 10_000
 
 
-def _http(url: str, payload: dict | None = None) -> dict:
-    req = urllib.request.Request(
-        url,
-        data=None if payload is None else json.dumps(payload).encode(),
-        headers={"Content-Type": "application/json"},
-        method="GET" if payload is None else "POST",
-    )
-    with urllib.request.urlopen(req, timeout=30) as resp:
-        return json.loads(resp.read())
+def broker_call(broker_url: str, path: str,
+                payload: dict | None = None) -> dict:
+    """One call on the broker's HTTP wire (GET without a payload, POST
+    with one).  A non-2xx reply raises, failing whatever drove it: the
+    source read, the restart reconciliation or the sink's epoch
+    commit."""
+    status, resp = _http(broker_url, path, "GET" if payload is None
+                         else "POST", payload, timeout_s=30.0)
+    if status >= 300:
+        raise RuntimeError(f"broker {path} failed: {status} {resp}")
+    return resp
 
 
 # ------------------------------------------------------------------ spool
@@ -129,8 +132,9 @@ class _BrokerStreamReader(SimpleDataSourceStreamReader):
         micro-batch mean 'no data yet', not 'time must pass'."""
         qs = f"topic={self._topic}&subscription={self._subscription}"
         for _ in range(_MAX_IDLE_ADVANCES):
-            got = _http(
-                f"{self._broker_url}/receive",
+            got = broker_call(
+                self._broker_url,
+                "/receive",
                 {
                     "topic": self._topic,
                     "subscription": self._subscription,
@@ -141,9 +145,9 @@ class _BrokerStreamReader(SimpleDataSourceStreamReader):
                 return [
                     (m["msg_id"], bytes.fromhex(m["payload"])) for m in got
                 ]
-            if _http(f"{self._broker_url}/waiting?{qs}")["n"] == 0:
+            if broker_call(self._broker_url, f"/waiting?{qs}")["n"] == 0:
                 return []
-            _http(f"{self._broker_url}/advance", {})
+            broker_call(self._broker_url, "/advance", {})
         raise RuntimeError(
             "broker stream made no progress after "
             f"{_MAX_IDLE_ADVANCES} clock advances"
@@ -220,10 +224,11 @@ def _reconcile_stranded(broker_url: str, topic: str, subscription: str,
             with open(os.path.join(spool_dir, f)) as fh:
                 spooled.update(mid for mid, _hx in json.load(fh))
     qs = f"topic={topic}&subscription={subscription}"
-    in_flight = _http(f"{broker_url}/in_flight?{qs}")["msg_ids"]
+    in_flight = broker_call(broker_url, f"/in_flight?{qs}")["msg_ids"]
     stranded = [mid for mid in in_flight if mid not in spooled]
-    return _http(
-        f"{broker_url}/redeliver",
+    return broker_call(
+        broker_url,
+        "/redeliver",
         {"topic": topic, "subscription": subscription, "msg_ids": stranded},
     )["n"]
 
@@ -240,24 +245,21 @@ def start_delivery_stream(
     batch_size: int = 500,
     state_dir: str | None = None,
 ):
-    """Compose and START the fully SINK-NATIVE StreamingQuery (caller
-    owns stop/drain) — round-6 VERDICT #2:
+    """Compose and START the sink-native StreamingQuery (caller owns
+    stop/drain) — round-6 VERDICT #2:
 
         readStream.format("pulsar_broker_sim")        consume channel
-          -> decode_avro_payload (engine transform)
-          -> writeStream.format("es_bulk_sim")        produce channel
-             (EsBulkAckStreamWriter: executor-side `_bulk`, epoch-commit
-             driven ack/nack over the broker wire)
+          -> pulsar_loop.sink_writer: decode_avro_payload, then
+             writeStream.format("es_bulk_sim")        produce channel
+             (executor-side `_bulk`, epoch-commit driven ack/nack over
+             the broker wire)
 
     BOTH channel ends are engine-owned DataSources over the HTTP wire —
     the reference's two channels (main.go:250-282), with no broker
     object closed over anywhere in the query.  Per-epoch commit
     manifests land under ``state_dir``/_commits."""
-    from go_pulsar_elasticsearch_spark.ingest.avro import (
-        decode_avro_payload,
-    )
     from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
-        _DOC_COLS,
+        sink_writer,
     )
     from go_pulsar_elasticsearch_spark.sources.es_writer_sim import (
         EsBulkDataSource,
@@ -278,21 +280,11 @@ def start_delivery_stream(
         .option("spool_dir", spool_dir)
         .load()
     )
-    # poison rows (uuid NULL after the PERMISSIVE decode) stay in the
-    # frame: the sink routes them to nack without posting — the same
-    # escalator as the certified loop (main.go:131-143)
-    decoded = decode_avro_payload(stream, passthrough=("msg_id",)).select(
-        *_DOC_COLS, "msg_id"
-    )
     return (
-        decoded.writeStream.format("es_bulk_sim")
-        .option("endpoint", endpoint)
-        .option("index", index)
-        .option("id_field", "uuid")
-        .option("state_dir", state_dir)
-        .option("broker_url", broker_url)
-        .option("topic", topic)
-        .option("subscription", subscription)
+        sink_writer(
+            stream, endpoint, index, state_dir, broker_url, topic,
+            subscription,
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime="0 seconds")
         .start()

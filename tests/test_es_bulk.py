@@ -89,7 +89,7 @@ def test_429_then_5xx_trigger_doubling_backoff(mock_es):
     state.reject_queue = [429, 503]
     sleeps: list[float] = []
     opts = BulkClientOptions(retries=5, base_delay_s=0.01)
-    body = docs_to_ndjson([{"uuid": "a", "name": "x"}], "idx", "uuid")
+    body = docs_to_ndjson([{"uuid": "a", "name": "x"}], "idx")
     resp = bulk_post(url, body, opts, sleep=sleeps.append)
     assert resp["errors"] is False and len(resp["items"]) == 1
     assert sleeps == [0.01, 0.02]  # es.go:140-144: delay doubles per attempt
@@ -297,8 +297,7 @@ def test_reference_mapping_transcription(mock_es):
 
     state, url = mock_es
     name = ensure_dated_index(url, "index_data", "2021-06-02",
-                              INDEX_MAPPING_ES, shards=4, replicas=0,
-                              refresh_interval="10s")
+                              INDEX_MAPPING_ES)
     body = state.indices[name]
     m = body["mappings"]
     assert m["dynamic"] == "strict" and m["_source"] == {"enabled": True}

@@ -143,6 +143,40 @@ def test_batch_writer_delivers_same_path(spark, tmp_path, mock_es):
     assert manifest["n_ok"] == 5 and manifest["n_failed"] == 1
 
 
+def test_batch_writer_never_posts_null_uuid(spark, tmp_path, mock_es):
+    """A NULL uuid is a failed item, never an `_id: null` write: real ES
+    would reject it or mint an auto id, and either breaks the id-keyed
+    overwrite replay depends on (es.go:186).  The row goes to the DLQ
+    spool with its payload; the rest of the batch indexes."""
+    state, url = mock_es
+    df = spark.createDataFrame(
+        [("a0", "n0", 0), (None, "orphan", 1), ("a2", "n2", 2)],
+        "uuid string, name string, val long",
+    ).coalesce(1)
+    state_dir, dlq = str(tmp_path / "state"), str(tmp_path / "dlq")
+    spark.dataSource.register(EsBulkDataSource)
+    (
+        df.write.format("es_bulk_sim")
+        .option("endpoint", url)
+        .option("state_dir", state_dir)
+        .option("dlq_dir", dlq)
+        .mode("append")
+        .save()
+    )
+    assert None not in state.docs
+    assert set(state.docs) == {"a0", "a2"}
+    spooled = [
+        json.loads(line)
+        for f in glob.glob(f"{dlq}/*.ndjson")
+        for line in open(f)
+    ]
+    assert [(e["uuid"], e["doc"]["name"]) for e in spooled] == [
+        (None, "orphan")
+    ]
+    manifest = json.load(open(f"{state_dir}/_commits/0.json"))
+    assert manifest["n_ok"] == 2 and manifest["n_failed"] == 1
+
+
 def test_replay_dlq_reindexes_after_fix(spark, tmp_path, mock_es):
     """The full DLQ lifecycle: items fail -> spool -> operator fixes the
     cause -> replay lands them; a still-broken item re-spools."""

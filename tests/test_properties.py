@@ -3,6 +3,7 @@ the properties hold for ANY input, not just the fixtures."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -294,3 +295,21 @@ def test_durable_checkpoint_slot_round_trips(spark, tmp_path):
         spark.conf.set("spark.gpe.slots.durableCheckpoint", "false")
         release_slot("_test_durable")
         release_slot("_test_durable_r")
+
+
+@pytest.mark.parametrize(
+    "value, on",
+    [("1", True), ("true", True), ("YES", True), ("false", False),
+     ("0", False), ("", False), ("off", False)],
+)
+def test_durable_checkpoint_env_flag_accepts_only_truthy(
+    spark, monkeypatch, value, on
+):
+    """GPE_DURABLE_CHECKPOINT turns durable mode on only for an explicit
+    1/true/yes (any case) — ``false`` or ``0`` must leave it off."""
+    from go_pulsar_elasticsearch_spark.functions.caching import (
+        _durable_requested,
+    )
+
+    monkeypatch.setenv("GPE_DURABLE_CHECKPOINT", value)
+    assert _durable_requested(spark.range(1)) is on

@@ -1,6 +1,7 @@
 """The delivery loop as a LIVE StreamingQuery (round-5 VERDICT #1):
-readStream.format("pulsar_broker_sim") -> foreachBatch(decode -> _bulk
--> ack/nack) under a checkpoint.  Certifies (a) the engine-composed
+readStream.format("pulsar_broker_sim") -> decode ->
+writeStream.format("es_bulk_sim") (ack/nack at the epoch commit) under
+a checkpoint.  Certifies (a) the engine-composed
 drain equals the hand-rolled loop's certified dispositions, and (b) a
 mid-drain kill + restart from the same checkpoint converges to the
 same table — the reference's channel wiring (main.go:250-282) run by
