@@ -259,8 +259,10 @@ def _asof_merge(purchases: pd.DataFrame, views: pd.DataFrame) -> pd.DataFrame:
     ONE np.lexsort over the concatenated (view, purchase) key arrays
     orders both sides at once; a cumulative count of views along that
     order gives, per purchase, how many view keys sort strictly below
-    its own (user_id, ts, event_id) — event_ids are unique, so no
-    full-key tie exists and "below" is exactly "strictly preceding".
+    its own (user_id, ts, event_id).  A side key breaks full-key ties
+    purchase-first, so a view whose whole key equals the purchase's is
+    never counted as preceding it — "below" is exactly "strictly
+    preceding" even if event_ids repeat across the two sides.
     The latest preceding view for the SAME user is then view k-1
     whenever that view's user matches.  No per-purchase Python loop:
     an earlier version refined each purchase with two tiny
@@ -295,6 +297,7 @@ def _asof_merge(purchases: pd.DataFrame, views: pd.DataFrame) -> pd.DataFrame:
         nv = len(vu)
         order = np.lexsort(
             (
+                np.arange(nv + len(pu)) < nv,  # on a full tie, purchase first
                 np.concatenate([vi, pi]),
                 np.concatenate([vm, pm]),
                 np.concatenate([vu, pu]),

@@ -13,11 +13,12 @@ sources/es_bulk.py):
   bound, .env CHANNEL_SIZE);
 - DECODE runs distributed (ingest/avro.py mapInPandas over the pure
   codec), with the broker message id riding through as a column;
-- INDEX + RECONCILE is one batch write into the ``es_bulk_sim`` sink
-  (sources/es_writer_sim.py): executors post `_bulk`, and the write's
-  commit acks successes and nacks failures over the broker's wire —
-  the same sink and reconciliation the streaming driver
-  (sources/pulsar_stream.py) runs per micro-batch (``sink_writer``);
+- INDEX + RECONCILE is one epoch of the `_bulk` sink, written in
+  process (sources/es_writer_sim.write_epoch, the round number being
+  the batch id): executors post `_bulk`, and the epoch's commit acks
+  successes and nacks failures over the broker's wire — the same sink
+  and reconciliation the streaming driver (sources/pulsar_stream.py)
+  runs per micro-batch (``sink_writer``);
 - only counts return to the driver (the commit manifest), bounded by
   the receive batch, never by corpus size;
 - POISON rows (undecodable Avro, so uuid NULL) are failed items too:
@@ -37,6 +38,7 @@ certifies broker bookkeeping, codec, bulk protocol, and reader at once.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -58,29 +60,34 @@ _DOC_COLS = ("identifier", "name", "uuid", "type", "ingestion_time", "tags")
 
 def sink_writer(raw: DataFrame, endpoint: str, index: str, state_dir: str,
                 broker_url: str, topic: str, subscription: str):
-    """Decode a (msg_id long, value binary) frame, batch or streaming,
-    and point its writer at the ``es_bulk_sim`` sink in broker mode: the
-    one index + ack/nack path both delivery drivers share.  Poison rows
-    (uuid NULL after the PERMISSIVE decode) stay in the frame; the sink
-    nacks them without posting.  The caller registers EsBulkDataSource
-    once, adds mode/trigger to the returned DataFrameWriter or
-    DataStreamWriter, and starts it."""
+    """The one index + ack/nack path both delivery drivers share: decode
+    a (msg_id long, value binary) frame, batch or streaming, and bind
+    the `_bulk` sink in broker mode.  Returns ``(decoded, write)``,
+    where ``write(df, batch_id)`` writes a batch frame of ``decoded`` as
+    that epoch (es_writer_sim.write_epoch).  The stream hands ``write``
+    to ``decoded.writeStream.foreachBatch``, so the decode is planned
+    into the query once; the loop calls ``write(decoded, round)``.
+    Poison rows (uuid NULL after the PERMISSIVE decode) stay in the
+    frame; the sink nacks them without posting."""
     from go_pulsar_elasticsearch_spark.ingest.avro import (
         decode_avro_payload,
+    )
+    from go_pulsar_elasticsearch_spark.sources.es_writer_sim import (
+        write_epoch,
     )
 
     decoded = decode_avro_payload(raw, passthrough=("msg_id",)).select(
         *_DOC_COLS, "msg_id"
     )
-    writer = decoded.writeStream if decoded.isStreaming else decoded.write
-    return writer.format("es_bulk_sim").options(
-        endpoint=endpoint,
-        index=index,
-        state_dir=state_dir,
-        broker_url=broker_url,
-        topic=topic,
-        subscription=subscription,
-    )
+    options = {
+        "endpoint": endpoint,
+        "index": index,
+        "state_dir": state_dir,
+        "broker_url": broker_url,
+        "topic": topic,
+        "subscription": subscription,
+    }
+    return decoded, functools.partial(write_epoch, options=options)
 
 
 def run_delivery_loop(
@@ -94,19 +101,15 @@ def run_delivery_loop(
     max_rounds: int = 200,
 ) -> dict:
     """Drain ``topic`` through decode -> bulk -> ack/nack until every
-    message is acked or DLQ-routed, one ``sink_writer`` batch write per
-    round against the broker's HTTP wire endpoint.  Virtual time
+    message is acked or DLQ-routed, one ``sink_writer`` epoch per round
+    against the broker's HTTP wire endpoint.  Virtual time
     advances by the broker's redelivery delay whenever nothing is
     receivable, so tests never sleep.  Returns loop metrics (counts
     only)."""
-    from go_pulsar_elasticsearch_spark.sources.es_writer_sim import (
-        EsBulkDataSource,
-    )
     from go_pulsar_elasticsearch_spark.sources.pulsar_mock_broker import (
         make_broker_server,
     )
 
-    spark.dataSource.register(EsBulkDataSource)
     srv, broker_url = make_broker_server(broker)
     state_dir = tempfile.mkdtemp(prefix="gpe-loopstate-")
     rounds = received = acked = nacked = 0
@@ -118,20 +121,22 @@ def run_delivery_loop(
                     break
                 broker.advance(broker.nack_redelivery_delay_s)
                 continue
-            rounds += 1
             received += len(msgs)
             raw = spark.createDataFrame(
                 [(m.msg_id, bytearray(m.payload)) for m in msgs],
                 "msg_id long, value binary",
             )
-            sink_writer(
+            decoded, write = sink_writer(
                 raw, endpoint, index, state_dir, broker_url, topic,
                 subscription,
-            ).mode("append").save()
-            # a batch write is the sink's epoch 0: each round overwrites
-            # the manifest, and this round's counts are read right after
-            with open(os.path.join(state_dir, "_commits", "0.json")) as fh:
+            )
+            # the round number is the epoch's batch id: one manifest each
+            write(decoded, rounds)
+            with open(
+                os.path.join(state_dir, "_commits", f"{rounds}.json")
+            ) as fh:
                 manifest = json.load(fh)
+            rounds += 1
             acked += manifest["n_ok"]
             nacked += manifest["n_failed"]
     finally:
@@ -314,10 +319,10 @@ def pulsar_delivery_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _drive_stream(spark: SparkSession, sf_dir: str) -> tuple:
     """Seed + drain the LIVE Structured Streaming composition once per
     (process, sf_dir): readStream.format("pulsar_broker_sim") -> decode
-    -> writeStream.format("es_bulk_sim") under a checkpoint, acking and
-    nacking at each epoch commit — the reference's channel wiring
-    (main.go:250-282) run by the engine's own trigger/offset machinery
-    instead of a driver while-loop."""
+    -> foreachBatch(write_epoch) under a checkpoint, indexing and
+    acking/nacking each micro-batch in process — the reference's channel
+    wiring (main.go:250-282) run by the engine's own trigger/offset
+    machinery instead of a driver while-loop."""
     from go_pulsar_elasticsearch_spark.streaming.drain import drained
 
     def build() -> tuple:
@@ -344,8 +349,9 @@ def _drive_stream(spark: SparkSession, sf_dir: str) -> tuple:
 def pulsar_delivery_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The delivery loop as a LIVE StreamingQuery (round-5 VERDICT #1):
     same sink, same escalator, same closed-form oracle, but the receive
-    channel is a streaming data source feeding the ``es_bulk_sim`` sink
-    under the engine's checkpoint/offset log — replayable batches,
+    channel is a streaming data source whose micro-batches reach the
+    sink through ``foreachBatch(write_epoch)`` under the engine's
+    checkpoint/offset log — replayable batches,
     restart-safe (the mid-drain kill/restart path is pytest-certified in
     tests/test_pulsar_stream.py)."""
     tune(spark)

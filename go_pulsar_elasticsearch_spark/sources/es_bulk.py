@@ -24,8 +24,8 @@ One write path: every `_bulk` request the package sends goes through
 `bulk_index` — a generator over (index, doc, tag) items that serializes
 each doc once, chunks by count and bytes, and yields every item paired
 with its per-item result in input order.  Its callers are the
-`es_bulk_sim` DataSource writer (sources/es_writer_sim.py: batch and
-streaming writes, broker ack/nack, DLQ spool and `replay_dlq`) and
+sink's `EsBulkWriter` (sources/es_writer_sim.py: `write_epoch` and the
+`es_bulk_sim` DataSource, broker ack/nack, DLQ spool and `replay_dlq`) and
 `bulk_index_rows`, the mapInPandas transformation behind the
 foreachBatch body `write_batch_via_bulk`.  Each runs per partition on
 the executor — the reference's N bulk workers (`es.go:164`, NUMBER_* in

@@ -1,6 +1,18 @@
-"""The ES `_bulk` sink as a Spark 4 Python DataSource:
-``df.writeStream.format("es_bulk_sim")`` and ``df.write.format(
-"es_bulk_sim")`` — one writer for both, a batch write being epoch 0.
+"""The ES `_bulk` sink: one writer, ``EsBulkWriter``, behind two
+adapters that drive it with the same per-epoch contract.
+
+  write_epoch(df, batch_id, options)
+                   the in-process form the delivery drivers use (a
+                   ``foreachBatch`` body, or one call per loop round):
+                   runs ``write`` per partition inside one
+                   ``mapInArrow`` job, then ``commit`` — or ``abort`` on
+                   failure — in the calling driver process.
+  format("es_bulk_sim")
+                   the Spark 4 Python DataSource, for generic batch and
+                   streaming writers (``df.write`` / ``df.writeStream``;
+                   a batch write is epoch 0).
+
+Both reach the same three methods:
 
   write(iterator)  once per partition per epoch, executor-side: rows ->
                    JSON docs -> es_bulk.bulk_index (chunked ``_bulk``
@@ -223,6 +235,48 @@ class EsBulkDataSource(DataSource):
 
     def writer(self, schema, overwrite) -> EsBulkWriter:
         return EsBulkWriter(self.options)
+
+
+def write_epoch(df, batch_id: int, options: dict) -> None:
+    """Write ``df`` as epoch ``batch_id`` of the sink in process:
+    ``EsBulkWriter(options).write`` runs per partition inside one
+    ``mapInArrow`` job, fed the Rows Spark's DataSource write path
+    builds from Arrow; only the pickled commit messages (counts and
+    batch-bounded msg ids) reach the driver, and ``commit`` runs in the
+    calling process.  A failed job or commit calls ``abort`` and
+    re-raises.  As a ``foreachBatch`` body this skips the two
+    driver-side Python worker round trips Spark 4.1 makes per
+    micro-batch for a DataSource stream writer (writer planning and
+    commit)."""
+    import pickle
+
+    writer = EsBulkWriter(options)
+    schema = df.schema
+
+    def write_partition(batches):
+        import pyarrow as pa
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        rows = (
+            row
+            for batch in batches
+            for row in ArrowTableToRowsConversion.convert(
+                pa.Table.from_batches([batch]), schema
+            )
+        )
+        msg = pickle.dumps(writer.write(rows))
+        yield pa.record_batch([pa.array([msg])], names=["message"])
+
+    messages = []
+    try:
+        messages = [
+            pickle.loads(r.message)
+            for r in df.mapInArrow(write_partition, "message binary").collect()
+        ]
+        writer.commit(messages, batch_id)
+    except Exception:
+        writer.abort(messages, batch_id)
+        raise
 
 
 def replay_dlq(spark, dlq_dir: str, endpoint: str,

@@ -3,11 +3,13 @@
 and bulk processor (main.go:250-282) IS the streaming engine's job, so
 this module runs it under the engine's own trigger/offset machinery —
 ``readStream.format("pulsar_broker_sim")`` -> Avro decode ->
-``writeStream.format("es_bulk_sim")`` with a checkpoint, the sink acking
-and nacking at each epoch commit.  The hand-rolled while-loop
+``writeStream.foreachBatch`` with a checkpoint: each micro-batch is
+indexed by executors and committed in the driver
+(es_writer_sim.write_epoch), the commit acking and nacking over the
+broker's wire.  The hand-rolled while-loop
 (operators/pulsar_loop.run_delivery_loop) writes each round through the
-same sink (``pulsar_loop.sink_writer``), so both drivers share one
-`_bulk` + reconciliation path.
+same ``pulsar_loop.sink_writer``, so both drivers share one `_bulk` +
+reconciliation path.
 
 Process topology (discovered the hard way): Spark runs a Python
 streaming source's ``read()`` in a SEPARATE worker process
@@ -250,26 +252,22 @@ def start_delivery_stream(
 
         readStream.format("pulsar_broker_sim")        consume channel
           -> pulsar_loop.sink_writer: decode_avro_payload, then
-             writeStream.format("es_bulk_sim")        produce channel
-             (executor-side `_bulk`, epoch-commit driven ack/nack over
-             the broker wire)
+             writeStream.foreachBatch(write_epoch)    produce channel
+             (executor-side `_bulk`, driver-side commit acking and
+             nacking over the broker wire)
 
-    BOTH channel ends are engine-owned DataSources over the HTTP wire —
-    the reference's two channels (main.go:250-282), with no broker
-    object closed over anywhere in the query.  Per-epoch commit
-    manifests land under ``state_dir``/_commits."""
+    BOTH channel ends talk to the broker over the HTTP wire — the
+    reference's two channels (main.go:250-282), with no broker object
+    closed over anywhere in the query.  Per-micro-batch commit
+    manifests land under ``state_dir``/_commits/<batchId>.json."""
     from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
         sink_writer,
-    )
-    from go_pulsar_elasticsearch_spark.sources.es_writer_sim import (
-        EsBulkDataSource,
     )
 
     os.makedirs(spool_dir, exist_ok=True)
     state_dir = state_dir or tempfile.mkdtemp(prefix="gpe-sinkstate-")
     _reconcile_stranded(broker_url, topic, subscription, spool_dir)
     spark.dataSource.register(PulsarBrokerDataSource)
-    spark.dataSource.register(EsBulkDataSource)
 
     stream = (
         spark.readStream.format("pulsar_broker_sim")
@@ -280,11 +278,11 @@ def start_delivery_stream(
         .option("spool_dir", spool_dir)
         .load()
     )
+    decoded, write = sink_writer(
+        stream, endpoint, index, state_dir, broker_url, topic, subscription
+    )
     return (
-        sink_writer(
-            stream, endpoint, index, state_dir, broker_url, topic,
-            subscription,
-        )
+        decoded.writeStream.foreachBatch(write)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime="0 seconds")
         .start()

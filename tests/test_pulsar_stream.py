@@ -1,17 +1,20 @@
 """The delivery loop as a LIVE StreamingQuery (round-5 VERDICT #1):
 readStream.format("pulsar_broker_sim") -> decode ->
-writeStream.format("es_bulk_sim") (ack/nack at the epoch commit) under
-a checkpoint.  Certifies (a) the engine-composed
-drain equals the hand-rolled loop's certified dispositions, and (b) a
-mid-drain kill + restart from the same checkpoint converges to the
-same table — the reference's channel wiring (main.go:250-282) run by
-the engine's own offset log."""
+foreachBatch(write_epoch: executor `_bulk`, ack/nack at the driver-side
+commit) under a checkpoint.  Certifies (a) the engine-composed drain equals the
+hand-rolled loop's certified dispositions, (b) a mid-drain kill +
+restart from the same checkpoint converges to the same table, and (c)
+the per-micro-batch manifests and abort markers account for every ack
+and nack — the reference's channel wiring (main.go:250-282) run by the
+engine's own offset log."""
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from go_pulsar_elasticsearch_spark.ingest.avro import (
     INGESTION_AVRO_SCHEMA,
@@ -77,6 +80,18 @@ def _assert_dispositions(broker, es_state):
     # everything else landed in the index, nothing rejected leaked in
     assert set(es_state.docs) == {str(i) for i in range(_N)} - fail
     assert broker.pending(_TOPIC, _SUB) == 0
+
+
+def _record_acks(broker) -> dict[str, list[int]]:
+    """Record the msg ids the sink acks and nacks over the wire."""
+    seen: dict[str, list[int]] = {"ack": [], "nack": []}
+    for kind, ids in seen.items():
+        def record(topic, sub, mid, _inner=getattr(broker, kind), _ids=ids):
+            _ids.append(mid)
+            _inner(topic, sub, mid)
+
+        setattr(broker, kind, record)
+    return seen
 
 
 def test_streaming_drain_matches_closed_form(spark, fixture):
@@ -248,4 +263,89 @@ def test_spool_is_truncated_as_batches_commit(spark, fixture):
     left = glob.glob(os.path.join(spool, "batch-*.json"))
     # 200 msgs / 20 per batch + redelivery waves >> the kept window
     assert 0 < len(left) <= 4, sorted(os.path.basename(p) for p in left)
+    _assert_dispositions(broker, es_state)
+
+
+def test_stream_manifests_balance_the_broker(spark, fixture):
+    """Every micro-batch with input rows leaves its own commit manifest,
+    the manifests' counts are exactly the acks and nacks the broker
+    received, and the sink is Spark's foreachBatch sink — the delivery
+    path never goes through the Python DataSource writer."""
+    broker, es_state, url, tmp = fixture
+    seen = _record_acks(broker)
+    state = tmp / "state"
+    srv, broker_url = make_broker_server(broker)
+    try:
+        q = start_delivery_stream(
+            spark, broker_url, _TOPIC, _SUB, url, str(tmp / "ckpt"),
+            str(tmp / "spool"), batch_size=60, state_dir=str(state),
+        )
+        try:
+            deadline = time.monotonic() + 120
+            while broker.pending(_TOPIC, _SUB) > 0:
+                assert time.monotonic() < deadline, "stream did not drain"
+                q.processAllAvailable()
+                time.sleep(0.02)
+            sink = q.lastProgress["sink"]["description"]
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+        progress = q.recentProgress
+    finally:
+        srv.shutdown()
+    _assert_dispositions(broker, es_state)
+    assert sink.startswith("ForeachBatchSink"), sink
+
+    with_rows = [p.batchId for p in progress if p.numInputRows > 0]
+    assert with_rows
+    manifests = {
+        int(f.stem): json.loads(f.read_text())
+        for f in (state / "_commits").glob("*.json")
+    }
+    assert set(with_rows) <= set(manifests)
+    assert all(m["batch_id"] == k for k, m in manifests.items())
+    assert sum(m["n_ok"] for m in manifests.values()) == len(seen["ack"])
+    assert sum(m["n_failed"] for m in manifests.values()) == len(
+        seen["nack"]
+    )
+    assert not (state / "_aborts").exists()
+
+
+def test_failed_epoch_aborts_then_replays(spark, fixture):
+    """A micro-batch whose `_bulk` fails outright (500 to every request)
+    fails the stream, leaves ``_aborts/<batchId>.json`` and no manifest,
+    and acks or nacks nothing.  A restart from the same checkpoint
+    against the healthy cluster replays the batch from the spool and
+    drains to the certified dispositions."""
+    broker, es_state, url, tmp = fixture
+    seen = _record_acks(broker)
+    ckpt, spool, state = str(tmp / "ckpt"), str(tmp / "spool"), tmp / "state"
+    es_state.reject_queue = [500] * 1000
+    srv, broker_url = make_broker_server(broker)
+    try:
+        q = start_delivery_stream(
+            spark, broker_url, _TOPIC, _SUB, url, ckpt, spool,
+            batch_size=60, state_dir=str(state),
+        )
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(120)
+    finally:
+        srv.shutdown()
+    assert [f.name for f in (state / "_aborts").iterdir()] == ["0.json"]
+    assert not (state / "_commits").exists()
+    assert seen == {"ack": [], "nack": []}
+    assert es_state.docs == {}
+
+    es_state.reject_queue = []
+    metrics = run_delivery_stream(
+        spark,
+        broker,
+        _TOPIC,
+        _SUB,
+        url,
+        batch_size=60,
+        checkpoint_dir=ckpt,
+        spool_dir=spool,
+    )
+    assert metrics["pending"] == 0
     _assert_dispositions(broker, es_state)

@@ -103,18 +103,14 @@ def test_cogrouped_asof_edge_cases(spark, tmp_path, monkeypatch):
     assert out[41]["asof_view_ms"] == base + 6000  # same-ts smaller id wins
 
 
-def test_asof_merge_matches_bruteforce():
-    """The single-lexsort _asof_merge (r9 vectorization) against a
-    per-purchase brute-force scan on randomized data: same users, heavy
-    ts collisions (so the strict (ts, event_id) tie rule is exercised),
-    users with views only / purchases only / neither."""
+def _asof_frames(n_p, n_v, v_id0):
+    """Randomized (purchases, views) for the brute-force checks: shared
+    users, heavy ts collisions (so the strict (ts, event_id) tie rule is
+    exercised), users with views only / purchases only / neither."""
     import numpy as np
     import pandas as pd
 
-    from go_pulsar_elasticsearch_spark.llm.udfs import _asof_merge
-
     rng = np.random.default_rng(42)
-    n_p, n_v = 400, 500
     base = datetime.datetime(2024, 1, 1)
 
     def mk(n, id0):
@@ -133,7 +129,18 @@ def test_asof_merge_matches_bruteforce():
             }
         )
 
-    purchases, views = mk(n_p, 1_000), mk(n_v, 100_000)
+    return mk(n_p, 1_000), mk(n_v, v_id0)
+
+
+def _assert_asof_matches_bruteforce(purchases, views):
+    """_asof_merge against a per-purchase scan: each purchase takes the
+    latest same-user view whose (ts, event_id) is strictly below its
+    own."""
+    import pandas as pd
+
+    from go_pulsar_elasticsearch_spark.llm.udfs import _asof_merge
+
+    n_p, n_v = len(purchases), len(views)
     out = _asof_merge(purchases, views).set_index("purchase_id")
     assert len(out) == n_p
     v_ms = (
@@ -163,6 +170,27 @@ def test_asof_merge_matches_bruteforce():
         else:
             assert int(row["asof_view_ms"]) == best[0]
             assert int(row["ms_since_view"]) == pms - best[0]
+
+
+def test_asof_merge_matches_bruteforce():
+    """The single-lexsort _asof_merge (r9 vectorization) against a
+    per-purchase brute-force scan on randomized data (disjoint event_id
+    ranges on the two sides)."""
+    _assert_asof_matches_bruteforce(*_asof_frames(400, 500, 100_000))
+
+
+def test_asof_merge_full_key_tie_is_not_preceding():
+    """A view whose whole (user_id, ts, event_id) key equals a
+    purchase's does not strictly precede it: every third purchase gets
+    such a twin among the views, and one twin is that user's only view,
+    so a tie counted as preceding changes the result."""
+    import pandas as pd
+
+    purchases, views = _asof_frames(400, 500, 100_000)
+    lone = purchases.iloc[[0]].assign(user_id=1_000, event_id=999)
+    purchases = pd.concat([lone, purchases], ignore_index=True)
+    views = pd.concat([views, purchases.iloc[::3]], ignore_index=True)
+    _assert_asof_matches_bruteforce(purchases, views)
 
 
 def test_cogrouped_asof_plan_is_cogroup(spark, sf_dir):
